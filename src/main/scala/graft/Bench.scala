@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: executes every catalog query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
   *
@@ -13,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.prepare(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-bench")
 
     // Per-query execution datasheet (rows/bytes/shuffle/spill/task-skew
     // keyed by per-pass bench-<query>#p<pass> job groups; the written
@@ -106,15 +96,15 @@ object Bench {
       t
     }
 
-    // Host-calibration probe (VERDICT r11 #2): a FIXED, Spark-free
-    // micro-benchmark run at every pass boundary and recorded into the
-    // metrics datasheet, so cross-round wall-clock drift (this host shows
-    // ±16% windows — see the interleaving comment below) is attributable
-    // mechanically: if the committed record slows AND the probe ratio
-    // slows alike, it is the host window, not the code. CPU leg: 2^28
-    // splitmix64 steps (pure register arithmetic, no allocation — immune
-    // to heap/GC state). IO leg: 128 4-KiB write+force cycles in
-    // java.io.tmpdir (the state-store fsync shape). ~1 s total per probe.
+    // Host-calibration probe: a FIXED, Spark-free micro-benchmark run at
+    // every pass boundary and recorded into the metrics datasheet, so
+    // cross-round wall-clock drift (this host shows ±16% windows — see the
+    // interleaving comment below) is attributable mechanically: if the
+    // committed record slows AND the probe ratio slows alike, it is the
+    // host window, not the code. CPU leg: 2^28 splitmix64 steps (pure
+    // register arithmetic, no allocation — immune to heap/GC state). IO
+    // leg: 128 4-KiB write+force cycles in java.io.tmpdir (the state-store
+    // fsync shape). ~1 s total per probe.
     def calibrate(): (Double, Double) = {
       var x = 0x9E3779B97F4A7C15L
       var acc = 0L
@@ -269,11 +259,11 @@ object Bench {
     // when cwd is a repo root (a `.git` directory is present): there the
     // default flips to a tmpdir fallback, because every ad-hoc or
     // driver-side pass launched from the repo root was clobbering the
-    // committed bench_out.json/bench_metrics.json records (r10 finding).
-    // A deliberate record refresh sets SPARK_GRAFT_BENCH_OUT_DIR=.
-    // explicitly. The fallback is per-user under java.io.tmpdir (ADVICE
-    // r11: a fixed world-shared /tmp/graft_bench lets another user's run
-    // own the files and concurrent users clobber each other). Subset runs
+    // committed bench_out.json/bench_metrics.json records (r10 finding). A
+    // deliberate record refresh sets SPARK_GRAFT_BENCH_OUT_DIR=.
+    // explicitly. The fallback is per-user under java.io.tmpdir: a fixed
+    // world-shared /tmp/graft_bench lets another user's run own the files
+    // and concurrent users clobber each other. Subset runs
     // (SPARK_GRAFT_BENCH_ONLY set) get a ".subset" suffix so a partial
     // sweep can never overwrite a full one.
     val outDir = java.nio.file.Paths.get(
@@ -291,14 +281,14 @@ object Bench {
       val parent = outPath.toAbsolutePath.getParent
       if (parent != null) java.nio.file.Files.createDirectories(parent)
       // The FILE record carries run-provenance fields the one-line stdout
-      // contract does not (VERDICT r13 #8: the sf10 watch item existed
-      // largely because the old committed record's pass count/sampling was
-      // unknowable). Committed record refreshes copy this file, so every
-      // future record self-describes its sampling. The stdout line above
-      // stays byte-identical — the driver parses it.
+      // contract does not: a record whose pass count and sampling are
+      // unknowable cannot be compared across runs. Committed record
+      // refreshes copy this file, so every future record self-describes its
+      // sampling. The stdout line above stays byte-identical — the driver
+      // parses it.
       val fileJson = json.stripSuffix("}") +
         s""","passes":${passTimes.size},"partial_pass":${partialSamples.nonEmpty},""" +
-        s""""timeout_s":$queryTimeoutSec,"budget_s":${budgetSec.toLong},"cpus":$cpus}"""
+        s""""timeout_s":$queryTimeoutSec,"budget_s":${budgetSec.toLong},"cpus":${Graft.defaultCores}}"""
       java.nio.file.Files.writeString(outPath, fileJson + "\n")
     } catch { case e: Throwable => System.err.println(s"[bench] bench_out write failed: $e") }
     // stderr gets ONLY a compact line (total + 10 slowest): a 90-query

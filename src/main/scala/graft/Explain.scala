@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-inspection main: print a catalog query's physical plan without
@@ -14,15 +13,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "formatted"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.prepare(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.session("graft-explain", logLevel = "ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     // scalastyle:off println
     if (mode == "executed") {
@@ -31,8 +22,8 @@ object Explain {
       // AQEShuffleRead, broadcast conversions) exist only after execution.
       // Run the query's own plan instance to completion (every partition,
       // all columns — the same executedPlan object then self-reports
-      // isFinalPlan=true), then print it formatted. VERDICT r13 #5: the
-      // exchange-sharing claims need executed-plan evidence.
+      // isFinalPlan=true), then print it formatted: exchange-sharing
+      // claims need executed-plan evidence.
       df.queryExecution.toRdd.count()
       println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
     } else {

@@ -35,19 +35,6 @@ object Graft {
     // coalesces down but the initial number still bounds task-launch cost.
     if (c.get("spark.sql.shuffle.partitions") == "200")
       c.set("spark.sql.shuffle.partitions", "32")
-    // Join-strategy knobs (guide §3.1/§9), env-parameterised for A/B and
-    // production tuning; defaults = Spark's own (sort-merge preferred, no
-    // AQE SMJ→SHJ rewrite). Measured r13 (order-controlled interleaved
-    // A/B at sf0.1): wins are real but QUERY-LOCAL (q141 −20%, q58 −17%)
-    // with offsetting regressions elsewhere (q129 +17%) and a catalog sum
-    // within noise — so the defaults stay Spark's, and the knobs exist for
-    // deployments whose workload skews to the winning shapes.
-    sys.env.get("SPARK_GRAFT_PREFER_SHJ").foreach { v =>
-      val on = v.trim match { case "1" => true; case "0" => false; case s => s.toBoolean }
-      c.set("spark.sql.join.preferSortMergeJoin", (!on).toString)
-    }
-    sys.env.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD").foreach(v =>
-      c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", v))
     // Live-session twin of GraftExtensions' injectOptimizerRule: fuse
     // same-column scalar percentiles into one array-form buffer (see
     // [[graft.plans.FusePercentiles]]).
@@ -57,16 +44,23 @@ object Graft {
     spark
   }
 
-  /** Local session for tests / standalone mains. */
-  def localSession(appName: String = "graft", cores: Int = 4): SparkSession =
-    prepare(
-      SparkSession
-        .builder()
-        .master(s"local[$cores]")
-        .appName(appName)
-        .config("spark.sql.shuffle.partitions", cores.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+  /** Default local width for the mains: `SPARK_GRAFT_CPUS`, else 32. */
+  lazy val defaultCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The one session factory for the mains and the test suites: `cores`
+    * local slots (unless `master` names a deployment) and as many shuffle
+    * partitions, UTC, UI off, [[prepare]]d, at `logLevel`. */
+  def session(appName: String, cores: Int = defaultCores, master: Option[String] = None,
+              logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master.getOrElse(s"local[$cores]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    prepare(spark)
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

@@ -2314,8 +2314,8 @@ object Queries {
   // three heavy stages are 32-task balanced (hot_stage_skew 1.11); the
   // max task was the final `orderBy`'s AQE-coalesced single-task sort
   // of the RESULT — the total order exists only so the oracle can
-  // hash-compare deterministically. r12 (VERDICT r11 #4): the
-  // determinism sort now runs at the CONFIGURED width —
+  // hash-compare deterministically. So the determinism sort runs at
+  // the CONFIGURED width —
   // repartitionByRange(32) + sortWithinPartitions, the q167 "pin the
   // exchange at parallelism" move — an explicit width AQE will not
   // coalesce, so the result sort parallelizes instead of coalescing to
@@ -2902,8 +2902,8 @@ object Queries {
   // q41 GK-estimate tier and give up bit-parity), you do not
   // parallelize the exact multiset.
   //
-  // r12 (the q149 by-value move applied to the sampled tier, VERDICT
-  // r11 #4): the sample is pre-aggregated to DISTINCT values with
+  // The q149 by-value move applied to the sampled tier: the sample is
+  // pre-aggregated to DISTINCT values with
   // counts — a session-width shuffle — and the exact percentile runs
   // with the FREQUENCY argument over the distinct-value distribution.
   // Bit-parity holds because Percentile's buffer is a value→count map
@@ -7799,7 +7799,7 @@ object Queries {
   // ---------------------------------------------------------------- q206
   // q200's watermark-evicted dedup on the ROCKSDB state-store provider
   // (StreamingDedup.dedupFileStreamRocksDb) — the 100 TB state-backend
-  // certificate (VERDICT r11 #3): the default HDFS-backed provider keeps
+  // certificate: the default HDFS-backed provider keeps
   // every key's state in executor heap, an OOM ceiling when distinct keys
   // per partition outgrow memory; RocksDB bounds state by local disk and
   // changelog checkpointing uploads per-batch deltas. Identical query,
@@ -7817,7 +7817,7 @@ object Queries {
   // q195's stream-stream interval join on the ROCKSDB state-store
   // provider (StreamingJoin.intervalJoinFileStreamRocksDb) — the q206
   // state-backend certificate extended to the state shape that actually
-  // outgrows heap FIRST (VERDICT r12 missing #2): the symmetric-hash
+  // outgrows heap FIRST: the symmetric-hash
   // join buffers BOTH input sides in the store for the watermark
   // horizon, so its state is (two streams × horizon) wide where
   // watermark dedup holds one fingerprint per key. Identical query,

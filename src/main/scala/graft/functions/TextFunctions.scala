@@ -256,7 +256,7 @@ object TextFunctions {
     *     collapse — HTML5's ignore-first-newline rule applies, inner
     *     inline markup still strips to a (collapsible) space, and
     *     document-EDGE trim still applies to restored whitespace.
-    *     Accepted regex-tier limitation (ADVICE r11, pinned in TextSpec):
+    *     Accepted regex-tier limitation (pinned in TextSpec):
     *     entity decode (step 5) runs AFTER sentineling, so whitespace
     *     produced by character references inside a pre span (`&#10;`,
     *     `&#9;`, `&#32;`, `&Tab;`) is NOT protected and collapses like

@@ -110,9 +110,9 @@ object BpeTrainer {
 
   /** [[train]] plus the number of batched ROUNDS actually executed — the
     * quantity the top-B batching contract promises is ≈ nMerges/batchSize
-    * (conflict skips can stretch it slightly). Exposed for the scale
-    * rehearsal ([[graft.BpeScale]]); the training semantics are
-    * [[train]]'s, verbatim. */
+    * (conflict skips can stretch it slightly); the committed
+    * `BPE_SCALE_sf1.json` record reports it for 1,000-merge runs at sf1.
+    * The training semantics are [[train]]'s, verbatim. */
   def trainRounds(
       vocab: DataFrame,
       nMerges: Int,

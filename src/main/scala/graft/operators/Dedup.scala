@@ -785,11 +785,11 @@ object Dedup {
     * join is planned, naming the estimate — turning "6 hours of shuffle
     * spill" into an immediate, actionable error (raise τ, use shingles,
     * set `maxPrefixFreq`). "Use shingles" is now a committed measurement,
-    * not prose: `KCORE_DEMO_sf10.json` (graft.KCoreDemo) runs q148's
+    * not prose: the committed `KCORE_DEMO_sf10.json` record ran q148's
     * exact k-core shape twice at sf10 — unigram (the fixture's dense
     * 31-token vocabulary) reproduces the committed 54 GB disk / 238 GB
     * memory verify-sort spill at 956 s wall, while 3-shingles with every
-    * other parameter identical runs the same operator with ZERO spill at
+    * other parameter identical ran the same operator with ZERO spill at
     * 54 s wall. The spill is the fixture's vocabulary density, not the
     * operator's plan. The same measured mass sizes the candidate
     * join's reducer count (pair-proportional — see the width comment in
@@ -885,28 +885,28 @@ object Dedup {
         Seq("__t"), "left_semi")
     // Pre-flight blowup guard (see scaladoc), evaluated EAGERLY at
     // operator-call time when a cap is requested (the operator is already
-    // eager — `ordered` is a localCheckpoint — so this adds one
-    // index-sized aggregation job from the checkpoint, not a new
-    // eagerness class). Fold-into-the-checkpoint-pass considered and
-    // SKIPPED (r12, VERDICT r11 #5's own skip clause): measured cost is
+    // eager — `ordered` is a localCheckpoint — so this adds one index-sized
+    // aggregation job from the checkpoint, not a new eagerness class).
+    // Folding it into the checkpoint pass does not pay: measured cost is
     // 0.47-0.5 s warm at sf0.1 (1.4 s cold), dominated by the index-sized
     // explode+shuffle that prefix counting inherently needs — the
     // checkpoint job materializes per-DOC rows, and piggybacking a
-    // per-TOKEN count onto it means either checkpointing the exploded
-    // table instead (re-plans the checkpoint, larger materialization) or
-    // an accumulator inside mapPartitions (breaks codegen and the width
-    // pins). The guard stays a separate, correctly-sized job. One aggregation computes BOTH the pair mass
-    // Σn(n−1) and the index size Σn; the collected numbers serve two
-    // masters: the caps fire driver-side (the job dies before the
-    // candidate join is even PLANNED), and the measured mass sizes the
-    // candidate and verify widths below — an output-exploding join's
-    // right width is pair-proportional, and only the guard knows the pair
-    // mass. Uncapped callers skip the guard job AND the pins entirely and
-    // get the planner's own choices — the r9-measured fast path for
-    // fixture-scale dense graphs (q148's 31-token-vocabulary unigram
-    // corpus: the guard job + pinned exchanges cost more than the whole
-    // uncapped query). n·(n−1) runs in decimal(38,0) (a single 10¹⁰-doc
-    // boilerplate token squares past 2^63).
+    // per-TOKEN count onto it means either checkpointing the exploded table
+    // instead (re-plans the checkpoint, larger materialization) or an
+    // accumulator inside mapPartitions (breaks codegen and the width pins).
+    // The guard stays a separate, correctly-sized job. One aggregation
+    // computes BOTH the pair mass Σn(n−1) and the index size Σn; the
+    // collected numbers serve two masters: the caps fire driver-side (the
+    // job dies before the candidate join is even PLANNED), and the measured
+    // mass sizes the candidate and verify widths below — an
+    // output-exploding join's right width is pair-proportional, and only
+    // the guard knows the pair mass. Uncapped callers skip the guard job
+    // AND the pins entirely and get the planner's own choices — the
+    // r9-measured fast path for fixture-scale dense graphs (q148's
+    // 31-token-vocabulary unigram corpus: the guard job + pinned exchanges
+    // cost more than the whole uncapped query). n·(n−1) runs in
+    // decimal(38,0) (a single 10¹⁰-doc boilerplate token squares past
+    // 2^63).
     val guarded = maxCandidatePairs > 0 || maxPairsPerEntry > 0
     val pairMass2: BigDecimal = if (!guarded) BigDecimal(0) else {
       val guardRow = pruned
@@ -932,9 +932,6 @@ object Dedup {
             s"entries exceed the cap (maxCandidatePairs=$maxCandidatePairs, " +
             s"maxPairsPerEntry=$maxPairsPerEntry) — raise tau, use shingles, " +
             "or set maxPrefixFreq")
-      if (sys.env.contains("GRAFT_SIMJOIN_DEBUG"))
-        System.err.println(s"[simjoin-guard] pairs=${(p2 / 2).toBigInt} " +
-          s"idxEntries=${idxEntries.toBigInt} tau=$tauNum/$tauDen k=$shingleK")
       p2
     }
     val indexed = pruned
@@ -1048,20 +1045,20 @@ object Dedup {
     // distinct: its per-row cost (a token-array merge walk) is CPU AQE's
     // byte-based sizing underestimates (measured at sf1: 19 task-seconds
     // coalesced into 6 tasks), and the right width is pair-proportional —
-    // the guard already measured the mass. ONE pin, on the bare pair
-    // table, and none between the joins: at fixture scale the doc-table
-    // side of both joins BROADCASTS, so the pinned exchange ships only
-    // (doc_a, doc_b) longs and the joins run map-side at its width. A
-    // second repartition between the joins ships the JOINED rows — pairs
-    // with their full token arrays attached — and measured 32 MB → 404 MB
-    // total shuffle, 4.8 s → 12 s wall on q148's dense unigram graph.
-    // (r11) The former doc_a-keyed verify repartition is gone: the pinned
-    // dedup above already leaves the pair table hash-partitioned on
-    // (doc_a, doc_b) at the mass-proportional width, so the verify joins
-    // run map-side (broadcast doc table) in exactly those partitions — a
-    // second exchange shipped the deduped pairs again for nothing. The
-    // (doc_a, doc_b) key also spreads hub documents that a doc_a-only
-    // key concentrated into one reducer (the r10 ADVICE caveat).
+    // the guard already measured the mass. ONE pin, on the bare pair table,
+    // and none between the joins: at fixture scale the doc-table side of
+    // both joins BROADCASTS, so the pinned exchange ships only (doc_a,
+    // doc_b) longs and the joins run map-side at its width. A second
+    // repartition between the joins ships the JOINED rows — pairs with
+    // their full token arrays attached — and measured 32 MB → 404 MB total
+    // shuffle, 4.8 s → 12 s wall on q148's dense unigram graph. There is no
+    // doc_a-keyed verify repartition: the pinned dedup above already leaves
+    // the pair table hash-partitioned on (doc_a, doc_b) at the
+    // mass-proportional width, so the verify joins run map-side (broadcast
+    // doc table) in exactly those partitions — a second exchange shipped
+    // the deduped pairs again for nothing. The (doc_a, doc_b) key also
+    // spreads hub documents that a doc_a-only key concentrated into one
+    // reducer.
     val orderedA = ordered.select(col("__doc").as("doc_a"),
       array_sort(col("__tk")).as("__ta"), col("__sz").as("n_a"))
     val orderedB = ordered.select(col("__doc").as("doc_b"),
@@ -1070,25 +1067,23 @@ object Dedup {
     // mass (guide §3.1 — deliberately, not by the planner's size
     // estimates). At fixture mass the doc table broadcasts and the joins
     // run map-side on the dedup partitioning — leave the planner alone.
-    // Past `SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS` (default 2²⁸ pairs) the
-    // doc table is past broadcast range, so the planner would pick
-    // sort-merge — which SORTS the billions-row candidate stream twice
-    // (once per doc-id key), the exact stage the committed sf10 q148 row
-    // spills 54 GB disk / 238 GB memory in. A shuffled-hash join with the
-    // DOC table as build side sorts nothing: the pair stream is probed
+    // Past 2²⁸ pairs the doc table is past broadcast range, so the planner
+    // would pick sort-merge — which SORTS the billions-row candidate stream
+    // twice (once per doc-id key), the exact stage the committed sf10 q148
+    // row spills 54 GB disk / 238 GB memory in. A shuffled-hash join with
+    // the DOC table as build side sorts nothing: the pair stream is probed
     // as it arrives, per-partition build = corpus/width rows of token
-    // arrays. The explicit repartitions pin the probe exchanges at the
-    // same mass-proportional width as the dedup (AQE's byte-based sizing
+    // arrays. The explicit repartitions pin the probe exchanges at the same
+    // mass-proportional width as the dedup (AQE's byte-based sizing
     // under-provisions CPU-dense verify stages — the measured r11/r12
     // finding behind every width pin in this operator); both exchanges
-    // exist under sort-merge too, so this changes strategy and width,
-    // never adds a shuffle. Join strategy is semantics-free; the r13 NR6
-    // caveat (SHJ regressing q148 6.7 → 21.6 s) was the CANDIDATE
-    // self-join, whose giant shared-token build buckets are the opposite
-    // shape — here the build side is the small leg by construction.
-    // env for deployments, system property as the in-JVM test hook
-    val shjMinPairs = sys.env.get("SPARK_GRAFT_SIMJOIN_SHJ_MIN_PAIRS")
-      .orElse(sys.props.get("graft.simjoin.shj.min.pairs"))
+    // exist under sort-merge too, so this changes strategy and width, never
+    // adds a shuffle. Join strategy is semantics-free; the r13 NR6 caveat
+    // (SHJ regressing q148 6.7 → 21.6 s) was the CANDIDATE self-join, whose
+    // giant shared-token build buckets are the opposite shape — here the
+    // build side is the small leg by construction. The system property is
+    // the in-JVM test hook that lowers the tier.
+    val shjMinPairs = sys.props.get("graft.simjoin.shj.min.pairs")
       .map(_.toLong).getOrElse(1L << 28)
     val verified =
       if (guarded && pairMass2 / 2 > BigDecimal(shjMinPairs))

@@ -37,7 +37,7 @@ final class MetricsListener extends SparkListener {
     // Driver actions (Spark jobs) in the group — the iterative-loop
     // families' wall is per-round driver barriers, so job count is the
     // noise-free mechanism evidence for any "fewer actions per round"
-    // change (VERDICT r13 #3), where wall-clock needs a calm window.
+    // change, where wall-clock needs a calm window.
     var nJobs: Long = 0L
     var nTasks: Long = 0L
     var totalTaskMs: Long = 0L
@@ -67,7 +67,7 @@ final class MetricsListener extends SparkListener {
       }
 
     /** Absolute max task ms WITHIN the hot stage — the tail the skew
-      * RATIO divides by a shrinking mean (VERDICT r12 #4: q73's width-pin
+      * RATIO divides by a shrinking mean (q73's width-pin
       * cut total task-seconds 44% at a fixed ~1 s tail, and the ratio
       * READ WORSE for a better plan). A floor adjudication cites this
       * number staying flat across the change; a genuine hot key shows it
@@ -179,8 +179,8 @@ final class MetricsListener extends SparkListener {
     * prepended as ordinary members of the same object — how Bench embeds
     * the calibration array. Built as one member list, so the sheet's
     * shape can never depend on textual surgery over the selection's
-    * rendering (ADVICE r12: the `substring(1)` splice silently coupled
-    * Bench to this method always emitting `{...}`). */
+    * rendering (a `substring(1)` splice would couple Bench to this method
+    * always emitting `{...}`). */
   def selectedJson(
       selection: Seq[(String, String)],
       leading: Seq[(String, String)]): String = {

@@ -2,13 +2,12 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Graft
 import graft.sources.{GeoJsonFixture, GeoJsonSource}
 
-/** End-to-end Milan pipeline run record (VERDICT r11 #6) — the reference's
+/** End-to-end Milan pipeline run record — the reference's
   * E1 (`main.py --all`, reference main.py:56-94) executed as ONE run over
   * synthesized inputs, emitting a committed datasheet (`MILAN_E2E.json`):
   * per-stage wall seconds, row/file counts, the double-load ledger proof,
@@ -31,9 +30,8 @@ import graft.sources.{GeoJsonFixture, GeoJsonSource}
   *     bad-datetime drop, null→0 fill, negative clamp, cell-range filter,
   *     province normalization).
   *
-  * Two shapes (VERDICT r12 #1 — the operators were proven piecewise and
-  * at sf10, but the E1 COMPOSITION had only run at 1/100th the
-  * reference's own data shape):
+  * Two shapes (the operators are proven piecewise and at sf10; only this
+  * run puts the E1 COMPOSITION at the reference's own data shape):
   *   - default (small): 2 day-files per table over 20k ids, grid 100,
   *     provinces 33 — the seconds-fast refresh fixture (`MILAN_E2E.json`);
   *   - `--full`: the reference's ACTUAL workload shape (notebook cells
@@ -55,17 +53,9 @@ object MilanE2E {
   def main(args: Array[String]): Unit = {
     val full = args.contains("--full")
     val outArg = args.filterNot(_ == "--full").headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.prepare(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("milan-e2e")
 
-    // Per-user root (ADVICE r12: a fixed world-shared path is wiped on
+    // Per-user root (a fixed world-shared path is wiped on
     // entry — two users on one host would clobber each other's in-flight
     // runs; same convention as the graft_bench-$USER fallback).
     val root = Paths.get(sys.props("java.io.tmpdir"),

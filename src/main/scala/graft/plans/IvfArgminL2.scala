@@ -31,13 +31,13 @@ import org.apache.spark.sql.types._
   * compare matches the DuckDB oracle's decimal arithmetic strictly
   * better — they differ only where two distances collide within a
   * double ulp, where the double form was the one diverging from the
-  * oracle.) Overflow contract (corrected r12, ADVICE r11): with 10⁻⁶
-  * quantization, Σ over `dim` of (Δq)² stays within Long for coordinate
-  * magnitudes up to ~√(2⁶³/dim)/2 × 10⁻⁶ — ≈ 48 at 1,000 dims, ≈ 190 at
-  * 64 dims — NOT ~10⁵ as previously claimed. Embeddings are O(1) by the
-  * l2SqExact contract, far inside that bound; out-of-contract magnitudes
-  * now fail LOUDLY (ArithmeticException from [[IvfArgminL2.argmin]] /
-  * [[IvfArgminL2.quantize]]) instead of wrapping to a silent wrong argmin.
+  * oracle.) Overflow contract: with 10⁻⁶ quantization, Σ over `dim` of
+  * (Δq)² stays within Long for coordinate magnitudes up to
+  * ~√(2⁶³/dim)/2 × 10⁻⁶ — ≈ 48 at 1,000 dims, ≈ 190 at 64 dims.
+  * Embeddings are O(1) by the l2SqExact contract, far inside that bound;
+  * out-of-contract magnitudes fail LOUDLY (ArithmeticException from
+  * [[IvfArgminL2.argmin]] / [[IvfArgminL2.quantize]]) instead of wrapping
+  * to a silent wrong argmin.
   *
   * Nulls: a null vector yields null (UnaryExpression contract); a null
   * ELEMENT or a length mismatch against the centroid dim yields null
@@ -82,8 +82,7 @@ case class IvfArgminL2(
     val cm = ctx.addReferenceObj("ivfCents", cents, "long[][]")
     // freshName, not a fixed local: two graft_ivf_argmin calls fused into
     // one whole-stage-codegen function would otherwise declare `r` twice —
-    // a Janino compile failure and a silent interpreted-mode fallback
-    // (ADVICE r11).
+    // a Janino compile failure and a silent interpreted-mode fallback.
     val r = ctx.freshName("ivfArgminRes")
     nullSafeCodeGen(ctx, ev, a => {
       s"""

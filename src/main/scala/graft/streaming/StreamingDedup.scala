@@ -106,14 +106,11 @@ object StreamingDedup {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true",
-    // Row-count TELEMETRY off by default (r14): with tracking on, every
-    // state put/delete pays an extra RocksDB get so numRowsTotal stays
-    // exact — measured on the q207 batch profile as part of an addBatch
-    // that runs 5.2× the heap provider's for identical compute (110k puts
-    // + 200k probe scans through JNI). Disabling changes ONLY the
-    // stateOperators.numRowsTotal progress metric (-1), never results —
-    // the documented production knob for write-heavy state. Env-restorable
-    // for deployments that want the gauge.
-    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_TRACK_ROWS", "false"))
+    // Row-count TELEMETRY off: with tracking on, every state put/delete
+    // pays an extra RocksDB get so numRowsTotal stays exact — measured on
+    // the q207 batch profile as part of an addBatch that runs 5.2× the
+    // heap provider's for identical compute (110k puts + 200k probe scans
+    // through JNI). Disabling changes ONLY the
+    // stateOperators.numRowsTotal progress metric (-1), never results.
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
 }

@@ -72,14 +72,13 @@ private[streaming] object StreamingHarness {
       adaptiveStatePartitions(spark, inputPaths) ++ extraConfs)
 
   /** Scale-adaptive shuffle/state partition count for a terminal streaming
-    * run: one partition per `SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES` of
-    * input, floored at 1 and capped at 16× the session width (the same
-    * work-per-slot bound every explicit width in the engine respects).
-    * `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides the count outright.
-    * The returned conf pair rides the set/restore hook, so the session's
-    * batch setting is untouched after the run.
+    * run: one partition per [[StatePartitionBytes]] of input, floored at 1
+    * and capped at 16× the session width (the same work-per-slot bound
+    * every explicit width in the engine respects). The returned conf pair
+    * rides the set/restore hook, so the session's batch setting is
+    * untouched after the run.
     *
-    * The 8 MiB default is the measured optimum of a U-shaped cost curve,
+    * The 8 MiB budget is the measured optimum of a U-shaped cost curve,
     * swept at BOTH bench scales on the five real-engine rows (min-of-3
     * per config, same host window; sf10 = the 100× rehearsal):
     * per-partition budget 1 MiB / 8 MiB / 64 MiB gave sf10 subset totals
@@ -90,39 +89,22 @@ private[streaming] object StreamingHarness {
     * of stores × operators × micro-batches for MB-scale state — a
     * stream-stream join alone keeps four stores per partition); too large
     * starves state-operator parallelism (a 64 MiB budget runs the sf10
-    * join on 6 partitions). A production deployment sets the env to its
-    * own per-partition state budget (typically 64-256 MiB of STATE — note
-    * this knob meters INPUT bytes, a proxy that overweights input-heavy /
-    * state-light streams, which is why it stays env-tunable). */
-  /** Parse an env var that must be a POSITIVE long; a malformed or
-    * non-positive value fails loudly NAMING the variable (a bare .toLong
-    * threw an anonymous NumberFormatException, and a zero budget divided
-    * by zero three lines later — ADVICE r13). */
-  private def envPositiveLong(name: String): Option[Long] =
-    sys.env.get(name).map { raw =>
-      val v = try raw.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$raw'")
-      }
-      if (v <= 0) throw new IllegalArgumentException(
-        s"$name must be a positive integer, got '$raw'")
-      v
-    }
-
+    * join on 6 partitions). It is a constant, not a setting: the count
+    * already scales with the input, and the cap with the session width,
+    * so a larger deployment gets more state partitions without tuning. */
   def adaptiveStatePartitions(
       spark: SparkSession, inputPaths: Seq[String]): Seq[(String, String)] = {
-    val n = envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      val per = envPositiveLong("SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES")
-        .getOrElse(8L << 20)
-      def bytes(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
-      val total = inputPaths.map(p => bytes(new java.io.File(p))).sum
-      val cap = spark.sessionState.conf.numShufflePartitions.toLong * 16
-      math.max(1L, math.min(cap, total / per + 1)).toInt
-    }
+    def bytes(f: java.io.File): Long =
+      if (f.isFile) f.length
+      else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
+    val total = inputPaths.map(p => bytes(new java.io.File(p))).sum
+    val cap = spark.sessionState.conf.numShufflePartitions.toLong * 16
+    val n = math.max(1L, math.min(cap, total / StatePartitionBytes + 1))
     Seq("spark.sql.shuffle.partitions" -> n.toString)
   }
+
+  /** Input bytes per state partition (see [[adaptiveStatePartitions]]). */
+  val StatePartitionBytes: Long = 8L << 20
 
   /** As above, with session confs overridden for the duration of the run
     * and restored (to the prior value, or unset) afterwards — the hook the

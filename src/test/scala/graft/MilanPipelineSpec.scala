@@ -72,6 +72,33 @@ class MilanPipelineSpec extends SparkSpec {
     assert(!pipe.catalogTableExists("no_such_view"))
   }
 
+  test("loadTraffic overwrites partitions dynamically without changing the session's mode") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val dataDir = Files.createTempDirectory("milan-conf-data")
+      val whDir = Files.createTempDirectory("milan-conf-wh")
+      writeFixtures(dataDir)
+      val pipe = new MilanPipeline(spark, whDir.toString)
+      val before = spark.conf.get(key)
+      assert(pipe.loadTraffic(dataDir.toString) == 1)
+      assert(spark.conf.get(key) == before)
+      // A second day-file lands next to the first: under a static
+      // overwrite the second write would have replaced the whole table.
+      Files.writeString(dataDir.resolve("sms-call-internet-mi-2013-11-02.csv"),
+        """datetime,CellID,countrycode,smsin,smsout,callin,callout,internet
+          |2013-11-02 00:00:00,5,39,1.0,,,,
+          |""".stripMargin)
+      assert(pipe.loadTraffic(dataDir.toString) == 1)
+      assert(spark.conf.get(key) == before)
+      assert(pipe.trafficFact.count() == 5)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("K5 backfillColumn fills only NULLs via crash-safe snapshot swap") {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_backfill")

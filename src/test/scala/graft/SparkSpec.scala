@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, sbt forks once). */
 object TestSpark {
-  lazy val spark: SparkSession = Graft.localSession("graft-test", 4)
+  lazy val spark: SparkSession = Graft.session("graft-test", 4)
 }
 
 trait SparkSpec extends AnyFunSuite {
